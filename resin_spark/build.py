@@ -50,14 +50,17 @@ from resin_spark.tokenizer import chars_key_py, tokens_col
 
 DEFAULT_FIELDS = ("text", "role", "tool")
 
-# docs-table parquet row-group budget.  The query path fetches top-k
-# docs by decoding whole row groups; with Spark's 128 MB default a
-# 10-row point fetch decompresses millions of text rows.  parquet-mr
-# sizes groups on BUFFERED (compressed) bytes, so 2 MB ≈ 20k transcript
-# rows (~100 B/row compressed) — bounded per-hit decode at any corpus
-# size, negligible footer overhead, and even very short rows (~50 B)
-# stay under the targeted reader's _POINT_RG_MAX_ROWS gate.
-DOCS_ROW_GROUP_BYTES = 2 * 1024 * 1024
+# parquet row-group budget of the docs and postings tables.  Every
+# embedded point read (top-k docs fetch, postings term lookup) decodes
+# whole row groups, and both tables are sorted on their lookup key
+# (doc_id; field, term) so min/max stats pick the covering groups: a
+# point read costs the few groups it hits, not the file.  parquet-mr
+# sizes a group on its BUFFERED bytes, which below the 1 MB page size
+# are the uncompressed encoded values: 256 KB lands near ~2k rows
+# (640k-turn benchmark corpus: ~2.3k docs rows, ~1.6k postings rows per
+# group).  parquet-mr checks the size only every so many rows (at least
+# 100), so a run of very large rows (stopword blocks) can overshoot it.
+ROW_GROUP_BYTES = 256 * 1024
 # block = conv_slot >> CONV_BLOCK_BITS — 4096 conversations per block
 CONV_BLOCK_BITS = 12
 BLOCK_SHIFT = ids.TURN_BITS + CONV_BLOCK_BITS
@@ -611,8 +614,10 @@ def postings_blocks(occurrences: DataFrame,
     aggregation buffers exist anywhere, so there is no unspillable
     collect_list hash map to blow up on huge segments — peak task memory
     is bounded by the Arrow batch size regardless of input size.  Output
-    rows come out (field, term)-sorted per file, so Parquet min/max stats
-    prune query-time term lookups."""
+    rows come out (field, term)-sorted per file; written in ROW_GROUP_BYTES
+    groups, Parquet min/max stats then prune query-time term lookups to
+    the groups that hold the term (given ``term == t`` filters: pyarrow
+    does not prune on ``isin``)."""
     spark = occurrences.sparkSession
     if positions and not unit_tf:
         raise ValueError("positional postings need unit-tf occurrence rows")
@@ -1073,12 +1078,11 @@ def _build_segment(
         .write.mode("overwrite")
         # bounded row groups: the top-k point fetch decodes whole row
         # groups to extract single rows, so a 128 MB default group makes
-        # a 10-doc fetch decompress ~2M text rows.  DOCS_ROW_GROUP_BYTES
-        # (2 MB compressed ≈ 20k rows — see the constant's note on
-        # parquet-mr's compressed-buffer sizing) bounds per-hit decode at
-        # any corpus size — the 100 TB fetch path — and enables the
-        # targeted row-group reader (executor._docs_rg_index).
-        .option("parquet.block.size", str(DOCS_ROW_GROUP_BYTES))
+        # a 10-doc fetch decompress ~2M text rows.  ROW_GROUP_BYTES
+        # bounds per-hit decode at any corpus size — the 100 TB fetch
+        # path — and enables the targeted row-group reader
+        # (executor._docs_rg_index).
+        .option("parquet.block.size", str(ROW_GROUP_BYTES))
         .parquet(f"{p_docs(root)}/segment={seg}")
     )
     docs = spark.read.parquet(f"{p_docs(root)}/segment={seg}")
@@ -1103,10 +1107,12 @@ def _build_segment(
     else:
         blocks = postings_blocks(occ, out_partitions=out_partitions,
                                  unit_tf=True, positions=positions)
+    # (field, term)-sorted files in ROW_GROUP_BYTES groups: a term
+    # lookup reads the few groups whose min/max stats cover the term
     with _arrow_batch_rows(spark):
-        blocks.write.mode("overwrite").option("compression", "zstd").parquet(
-            f"{p_postings(root)}/segment={seg}"
-        )
+        (blocks.write.mode("overwrite").option("compression", "zstd")
+         .option("parquet.block.size", str(ROW_GROUP_BYTES))
+         .parquet(f"{p_postings(root)}/segment={seg}"))
 
     # stats from the block METADATA (column-pruned read of the tiny
     # sum_tf/df_block columns): Σ sum_tf per field == Σ dl == total
@@ -1182,9 +1188,9 @@ def compact(spark: SparkSession, root: str) -> None:
     # bounds the decode batches (a dense universal-term block row decodes
     # to hundreds of KB) while the encoder still gets big record batches
     with _arrow_batch_rows(spark):
-        blocks.write.mode("overwrite").option("compression", "zstd").parquet(
-            f"{root}/postings{sfx}/segment=0"
-        )
+        (blocks.write.mode("overwrite").option("compression", "zstd")
+         .option("parquet.block.size", str(ROW_GROUP_BYTES))
+         .parquet(f"{root}/postings{sfx}/segment=0"))
     new_dirs["postings"] = f"postings{sfx}"
 
     for name, cur in (("doclens", p_doclens), ("stats", p_stats), ("docs", p_docs)):
@@ -1202,8 +1208,8 @@ def compact(spark: SparkSession, root: str) -> None:
         w = out.write.mode("overwrite")
         if name == "docs":
             # keep the compacted docs table point-fetchable (see
-            # DOCS_ROW_GROUP_BYTES)
-            w = w.option("parquet.block.size", str(DOCS_ROW_GROUP_BYTES))
+            # ROW_GROUP_BYTES)
+            w = w.option("parquet.block.size", str(ROW_GROUP_BYTES))
         w.parquet(f"{root}/{name}{sfx}/segment=0")
         new_dirs[name] = f"{name}{sfx}"
 

@@ -214,15 +214,19 @@ class SearchEngine:
         return [dict(zip(cols, vals)) for vals in zip(*data)]
 
     def _pa_filter_terms(self, by_field: dict):
-        """pyarrow filter for the queried (field, term) keys, or None."""
+        """pyarrow filter for the queried (field, term) keys, or None.
+        Each term is its own ``term == t`` equality: pyarrow prunes row
+        groups of the (field, term)-sorted postings files on equality
+        min/max stats but keeps every group for ``isin``."""
         if self._pa_dataset("postings") is None:
             return None
         import pyarrow.dataset as pads
 
         expr = None
         for f, toks in sorted(by_field.items()):
-            e = (pads.field("field") == f) & pads.field("term").isin(
-                sorted(toks))
+            e = (pads.field("field") == f) & _functools_reduce(
+                lambda a, b: a | b,
+                [pads.field("term") == t for t in sorted(toks)])
             expr = e if expr is None else (expr | e)
         return expr
 
@@ -612,15 +616,10 @@ class SearchEngine:
             # — the ranking order — so the page is a plain slice.
             if not hits:
                 return self._fetch_hits([], select)
-            import pyarrow.dataset as pads
-
             from resin_spark.tokenizer import tokenize_pandas
 
-            tbl = self._pa_dataset("docs").to_table(
-                columns=["doc_id", field],
-                filter=pads.field("doc_id").isin([int(d) for d, _ in hits]),
-            )
-            pdf = tbl.to_pandas()
+            pdf = self._docs_by_id([int(d) for d, _ in hits],
+                                   ["doc_id", field]).to_pandas()
             joined = tokenize_pandas(pdf[field].fillna("")).map(
                 lambda ts: " " + " ".join(ts) + " ")
             ok = set(pdf.loc[joined.str.contains(needle, regex=False),
@@ -705,11 +704,10 @@ class SearchEngine:
         rows = []
         if miss:
             rows = None
-            if self._pa_dataset("postings") is not None:
+            pa_f = self._pa_filter_terms({field: miss})
+            if pa_f is not None:
                 import pyarrow.dataset as pads
 
-                pa_f = (pads.field("field") == field) & pads.field(
-                    "term").isin(miss)
                 if blist is not None:
                     pa_f = pa_f & pads.field("block_id").isin(blist)
                 try:
@@ -1930,7 +1928,7 @@ class SearchEngine:
         if idxobj is None:
             return None
         mins, cum, entries = idxobj
-        groups: dict[tuple, tuple] = {}
+        by_path: dict[str, set[int]] = {}
         for d in need:
             i = bisect.bisect_right(mins, d) - 1
             # interval stabbing: files may interleave doc_id ranges (hash
@@ -1940,34 +1938,29 @@ class SearchEngine:
             while i >= 0 and cum[i] >= d:
                 e = entries[i]
                 if e[0] <= d <= e[1]:
-                    groups[(e[2], e[3])] = e
+                    by_path.setdefault(e[2], set()).add(e[3])
                 i -= 1
-        if not groups:
+        if not by_path:
             return None
+        import pyarrow.parquet as pq
+
         try:
             parts = []
-            by_path: dict[str, list[int]] = {}
-            for (_, _, path, g) in groups.values():
-                by_path.setdefault(path, []).append(g)
-            import pyarrow.parquet as pq
-
             for path, gs in by_path.items():
-                # open lazily per fetch (footer parse is ~ms): the index
-                # holds PATHS, not handles, so a many-file layout never
-                # pins thousands of file descriptors for the engine's
-                # lifetime
-                pf = pq.ParquetFile(path)
-                for g in sorted(gs):
-                    part = pf.read_row_group(g, columns=names)
-                    if any(n not in part.column_names for n in names):
-                        # pyarrow silently DROPS unknown names from
-                        # ``columns`` — e.g. the hive partition column
-                        # lives in the directory, not the file, and a
-                        # drifted file could lack a column the unified
-                        # dataset schema still lists.  Refuse rather
-                        # than return a narrower table.
-                        return None
-                    parts.append(part)
+                # open per fetch (footer parse is ~ms) and close at once:
+                # the index holds PATHS, not handles, so no descriptor
+                # outlives the fetch; one read per file covers its groups
+                with pq.ParquetFile(path) as pf:
+                    part = pf.read_row_groups(sorted(gs), columns=names)
+                if any(n not in part.column_names for n in names):
+                    # pyarrow silently DROPS unknown names from
+                    # ``columns`` — e.g. the hive partition column lives
+                    # in the directory, not the file, and a drifted file
+                    # could lack a column the unified dataset schema
+                    # still lists.  Refuse rather than return a narrower
+                    # table.
+                    return None
+                parts.append(part)
             tbl = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
             return tbl.filter(pc.is_in(
                 tbl["doc_id"], value_set=pa.array(need, type=pa.int64())))
@@ -1976,6 +1969,18 @@ class SearchEngine:
             # mismatch — the dataset scanner handles all of these (it
             # fills nulls from the unified schema)
             return None
+
+    def _docs_by_id(self, need: list[int], names: list[str]):
+        """Arrow table of the ``need`` doc rows: the targeted point read,
+        else the dataset scanner (legacy layout, partition column, schema
+        drift).  Every embedded docs-by-id read goes through here."""
+        tbl = self._docs_point_table(need, names)
+        if tbl is None:
+            import pyarrow.dataset as pads
+
+            tbl = self._pa_dataset("docs").to_table(
+                columns=names, filter=pads.field("doc_id").isin(need))
+        return tbl
 
     def _fetch_hits(self, hits: list[tuple[int, float]],
                     sel: list[str] | None) -> DataFrame:
@@ -1993,20 +1998,12 @@ class SearchEngine:
             # targeted row-group reader serves bounded-row-group layouts
             # (decode ∝ covering groups); the dataset scanner covers
             # everything else.
-            import pyarrow.dataset as pads
             from pyspark.sql.types import DoubleType, StructField, StructType
 
             cols = self._ranked_cols(docs, sel)
             names = list(dict.fromkeys(["doc_id"] + cols))
-            need = [int(d) for d, _ in hits]
-            tbl = (self._docs_point_table(need, names)
-                   if "segment" not in names else None)
-            if tbl is None:
-                tbl = self._pa_dataset("docs").to_table(
-                    columns=names,
-                    filter=pads.field("doc_id").isin(need),
-                )
-            pdf = tbl.to_pandas()
+            pdf = self._docs_by_id([int(d) for d, _ in hits],
+                                   names).to_pandas()
             smap = {int(d): float(s) for d, s in hits}
             pdf["score"] = pdf["doc_id"].map(smap)
             # the final sort runs HERE (stable, same float64 keys and

@@ -1,19 +1,21 @@
 """Targeted row-group point fetch (executor._docs_rg_index /
 _docs_point_table) over the bounded-row-group docs layout
-(build.DOCS_ROW_GROUP_BYTES).
+(build.ROW_GROUP_BYTES).
 
 The top-k fetch used to decode whole row groups through the dataset
 scanner — with Spark's 128 MB default groups a 10-doc fetch decompressed
 millions of text rows (measured 0.87 s/query at the 6M-turn tier, the
-dominant warm cost).  The build now writes ~2 MB groups and the fetch
-binary-searches cached footer stats to read only the covering groups
-(measured q_hot 0.53 -> 0.14 s warm at the 6M tier).  Invariants:
+dominant warm cost).  The build now writes 256 KB groups (~2.3k
+transcript rows) and the fetch binary-searches cached footer stats to
+read only the covering groups, with one read per covering file.
+Invariants:
 
 * the targeted read returns exactly the scanner's rows (parity across
   the targeted, scanner-forced, and Spark-join physical paths);
 * a partition-column select falls back to the scanner;
 * legacy oversized-group layouts bail to the scanner (gate test);
-* refresh() rebuilds the footer index (append visibility).
+* refresh() rebuilds the footer index (append visibility);
+* every covering file is closed after the fetch (no descriptor leak).
 """
 
 import pytest
@@ -76,3 +78,17 @@ def test_rg_index_refresh_rebuilds(fresh_engine):
     fresh_engine.refresh()
     idx2 = fresh_engine._docs_rg_index()
     assert idx2 is not None and idx2 is not idx1  # rebuilt after refresh
+
+
+def test_point_fetch_closes_covering_files(fresh_engine):
+    import os
+
+    need = fresh_engine._pa_dataset("docs").to_table(
+        columns=["doc_id"])["doc_id"].to_pylist()[::7]
+    names = ["doc_id", "text"]
+    first = fresh_engine._docs_point_table(need, names)  # builds the index
+    assert first is not None and first.num_rows == len(need)
+    before = len(os.listdir("/proc/self/fd"))
+    for _ in range(50):
+        assert fresh_engine._docs_point_table(need, names).num_rows == len(need)
+    assert len(os.listdir("/proc/self/fd")) == before
